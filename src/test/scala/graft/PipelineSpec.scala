@@ -28,6 +28,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("thrift input dir is auto-detected and ingested") {
+    assume(new java.io.File("/root/reference/samplejob/serialized").isDirectory,
+      "reference fixtures not available")
     val ds = pipeline.ingest(spark, "/root/reference/samplejob/serialized")
     assert(ds.collect().forall(_.labelViews.contains("tokens")))
   }
