@@ -14,12 +14,15 @@ import graft.sources.{Sources, ThriftCompat}
   *      — `containsSerializedRecords`, D11;
   *   2. archive lookup: reuse stored annotated records by content hash
   *      (D15) when a store is given;
-  *   3. plan: target's dependency chain minus common annotations detected
-  *      by sampling (D12), or minus a user-forced start;
-  *   4. execute: ONE narrow annotate pass (the reference's chain of
-  *      MapReduce jobs, shuffle-free here);
-  *   5. commit: upsert into the record store (D14), rotate any previous
-  *      output (D18), write results.
+  *   3. execute: ONE narrow annotate pass over every record (the
+  *      reference's chain of MapReduce jobs, shuffle-free here); each
+  *      record skips its fresh views and recomputes stale ones
+  *      (`Planner.provide`), and a user-forced start asserts its
+  *      dependencies present. No corpus-level plan gates the pass: a
+  *      sample cannot speak for the records outside it, and drawing one
+  *      evaluates the input a second time;
+  *   4. rotate any previous output (D18) and write the results;
+  *   5. commit: upsert the written results into the record store (D14).
   *
   * Every step is lazy DataFrame composition — nothing materializes until
   * the final write, so Catalyst sees the whole pipeline at once.
@@ -62,11 +65,8 @@ final class Pipeline(engine: AnnotationEngine) {
       case Some(store) => Sources.lookup(fresh, Sources.readRecords(spark, store))
       case None => fresh
     }
-    val plan = engine.planForCorpus(input, target, forcedStart)
-    val annotated =
-      if (plan.isEmpty) input // everything already present and fresh
-      else engine.annotate(input, target,
-        assumeFresh = Planner.assertedPresent(target, forcedStart))
+    val annotated = engine.annotate(input, target,
+      assumeFresh = Planner.assertedPresent(target, forcedStart))
     Sources.rotateOldOutput(spark, outputDir)
     Sources.writeRecords(annotated, outputDir, idPrefixPartitions = true)
     val result = Sources.readRecords(spark, outputDir)

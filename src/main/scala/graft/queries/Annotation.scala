@@ -219,17 +219,18 @@ object Annotation {
 
     // The reference's ACTUAL workload shape (JobHandler.java:163-194):
     // not one annotator over an in-memory corpus but the full D11-D18
-    // chain — ingest a record DIRECTORY, plan the dependency chain,
-    // annotate in one narrow pass, rotate old output, write, upsert the
+    // chain — ingest a record DIRECTORY, annotate the dependency chain
+    // in one narrow pass, rotate old output, write, upsert the
     // archive. The three q_annotate_* singles above time the operator;
-    // this times the COMPOSITION, so a regression in the planner probe,
+    // this times the COMPOSITION, so a regression in the input probe,
     // the rotation protocol, or the store upsert shows up in the bench
     // even when each piece passes its own spec. Staging (documents ->
     // record dir) is cached per sfDir; store and output are reset each
     // run so every run measures the identical cold path: the archive-HIT
-    // path (plan empty, annotate skipped) is a different workload,
-    // spec'd in PipelineSpec, and mixing the two would make min-of-N
-    // report whichever the scheduler hit. Oracle: per distinct non-empty
+    // path (every record's views found fresh, so the annotate pass is a
+    // per-record no-op) is a different workload, spec'd in PipelineSpec,
+    // and mixing the two would make min-of-N report whichever the
+    // scheduler hit. Oracle: per distinct non-empty
     // doc, n_tokens is the tokenizer replica from q_annotate_tokens and
     // n_pos equals it (the tagger emits exactly one tag per token) — so
     // the full D11-D18 chain is value-checked, not just row-counted.

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.{Identifier, Record}
@@ -33,12 +34,27 @@ object Sources {
     * each, to fresh Records (reference
     * `CuratorClient.createRecordsFromRawInputFiles`, 406-429). Empty
     * documents are rejected (`CuratorClient.java:527-536`); duplicate
-    * documents collapse by content hash (content-addressed identity). */
+    * documents collapse by content hash (content-addressed identity).
+    *
+    * The directory is the one root path and `pathGlobFilter` picks the
+    * `.txt` files, so Spark lists it once, without a listing job. A glob
+    * over the `.txt` files expands to one root path per file, and past 32
+    * roots Spark lists them with a parallel job of one task per file.
+    * Only top-level `.txt` files are documents: files in a plain
+    * subdirectory are not. An empty directory gives an empty corpus; a
+    * missing one fails with `PATH_NOT_FOUND`. A `k=v`-named subdirectory
+    * is refused: Spark would read it as a partition and drop the
+    * top-level files (one level deeper, its partition discovery fails
+    * with `CONFLICTING_DIRECTORY_STRUCTURES`). */
   def rawTextDir(spark: SparkSession, dir: String, whitespaced: Boolean = false): Dataset[Record] = {
     import spark.implicits._
-    spark.read.format("text").option("wholetext", "true")
-      .load(s"$dir/*.txt")
-      .select(col("value").as("rawText"))
+    val text = spark.read.format("text").option("wholetext", "true")
+      .option("pathGlobFilter", "*.txt")
+      .load(dir)
+    val partitions = text.columns.filterNot(_ == "value")
+    require(partitions.isEmpty,
+      s"$dir: k=v subdirectories (${partitions.mkString(", ")}) are not raw-text input")
+    text.select(col("value").as("rawText"))
       .filter(length(col("rawText")) > 0)
       .distinct() // content dedup on the string (hash-aggregable), not the record
       .as[String]
@@ -186,32 +202,42 @@ object Sources {
 
   /** D14: archive upsert — a record replaces its stored version iff it
     * carries MORE views (`CuratorClient.informDatabaseOfUpdatedRecords`,
-    * 581-651). Full outer join on identifier; the richer side wins.
+    * 581-651): the richer side wins, and on equal richness the stored
+    * record stays.
     *
     * Updates may carry the same identifier more than once (a micro-batch
-    * that saw a document twice): they are reduced to the richest version
-    * per id FIRST — richer-wins is then associative over any batch
-    * split, which is what makes the streaming sinks' sequential folds
-    * equal a one-shot merge (StreamingSpec's split-invariance property).
-    * Equal-richness duplicates tie-break on the sorted view-name list —
-    * deterministic, and immaterial when they are the same annotation
-    * depth of the same content (the only way ties arise from the
-    * deterministic annotators). */
+    * that saw a document twice): the richest of them is the candidate —
+    * richer-wins is then associative over any batch split, which is what
+    * makes the streaming sinks' sequential folds equal a one-shot merge
+    * (StreamingSpec's split-invariance property). Equal-richness
+    * duplicates tie-break on the sorted view-name list — deterministic,
+    * and immaterial when they are the same annotation depth of the same
+    * content (the only way ties arise from the deterministic annotators).
+    *
+    * One shuffle, no typed round trip: both sides are tagged (stored 0,
+    * update 1), richness is computed from the view-map keys as columns,
+    * and a `row_number` over `identifier` ordered by (richness desc,
+    * side, names) keeps the first row. */
   def upsert(store: Dataset[Record], updates: Dataset[Record]): Dataset[Record] = {
     val spark = store.sparkSession
     import spark.implicits._
-    val reduced = updates.groupByKey(_.identifier).reduceGroups { (a, b) =>
-      val (na, nb) = (a.viewNames.size, b.viewNames.size)
-      if (na != nb) { if (na > nb) a else b }
-      else if (a.viewNames.toSeq.sorted.mkString(",") <=
-        b.viewNames.toSeq.sorted.mkString(",")) a else b
-    }.map(_._2)
-    def keyed(ds: Dataset[Record], name: String) =
-      ds.map(r => (r.identifier, r.viewNames.size, r)).toDF("id", s"${name}_n", name)
-    keyed(store, "stored").join(keyed(reduced, "fresh"), Seq("id"), "full")
-      .select(when(col("fresh_n").isNotNull &&
-          (col("stored_n").isNull || col("fresh_n") > col("stored_n")), col("fresh"))
-        .otherwise(col("stored")).as("r"))
+    // the record struct lists its fields in Record's order on both sides:
+    // unionByName matches nested struct fields by position
+    val fields = Encoders.product[Record].schema.fieldNames.toIndexedSeq
+    def tagged(ds: Dataset[Record], side: Int) = {
+      val names = array_distinct(concat(
+        Seq("labelViews", "clusterViews", "parseViews", "views").map(c => map_keys(col(c))): _*))
+      ds.toDF().select(
+        col("identifier").as("id"),
+        size(names).as("n"),
+        lit(side).as("side"),
+        array_join(sort_array(names), ",").as("names"),
+        struct(fields.map(col): _*).as("r"))
+    }
+    val first = Window.partitionBy("id").orderBy(col("n").desc, col("side"), col("names"))
+    tagged(store, 0).unionByName(tagged(updates, 1))
+      .withColumn("rank", row_number().over(first))
+      .filter(col("rank") === 1)
       .select("r.*").as[Record]
   }
 

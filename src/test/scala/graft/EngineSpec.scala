@@ -133,6 +133,46 @@ class EngineSpec extends SparkSpec {
     // and the reverse: poorer update loses
     val kept = Sources.upsert(updates, store).collect()
     assert(kept.forall(_.labelViews.contains("pos")), "richer stored must survive")
+
+    import spark.implicits._
+    val text = docs.head
+    val fresh = Record.fresh(text)
+    val tok = eng.annotate(Seq(fresh).toDS(), M.TOKEN).head()
+    val pos = eng.annotate(Seq(fresh).toDS(), M.POS).head()
+    // duplicate updates of one id reduce to the richest of them
+    val dup = Sources.upsert(spark.emptyDataset[Record],
+      Seq(tok, pos, fresh).toDS().repartition(3)).collect()
+    assert(dup.toSeq == Seq(pos), "duplicate updates must reduce to the richest")
+    // equal richness: the stored record stays, even when the update differs
+    val relabeled = tok.copy(labelViews = tok.labelViews.updated("tokens",
+      tok.labelViews("tokens").copy(source = "other-tokenizer")))
+    val tie = Sources.upsert(Seq(tok).toDS(), Seq(relabeled).toDS()).collect()
+    assert(tie.toSeq == Seq(tok), "on equal richness the stored record must win")
+
+    // a store whose Parquet columns are in another order than the updates
+    // still merges field-for-field; both sides read from Parquet, the merge
+    // is one shuffle with no typed round trip
+    val base = Files.createTempDirectory("graft-upsert-order").toString
+    val stored = eng.annotate(corpus, M.POS).collect().toSeq
+    val shuffledCols = Seq("whitespaced", "views", "rawText", "parseViews",
+      "labelViews", "identifier", "clusterViews")
+    stored.toDS().toDF().select(shuffledCols.map(org.apache.spark.sql.functions.col): _*)
+      .write.parquet(s"$base/store")
+    Sources.writeRecords(corpus, s"$base/updates")
+    val storeDs = Sources.readRecords(spark, s"$base/store")
+    assert(storeDs.columns.toSeq == shuffledCols)
+    val merged2 = Sources.upsert(storeDs, Sources.readRecords(spark, s"$base/updates"))
+    assert(merged2.collect().sortBy(_.identifier).toSeq == stored.sortBy(_.identifier),
+      "the stored records must come back field-for-field")
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.DeserializeToObjectExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val plan = merged2.queryExecution.executedPlan
+    assert(Plans.collect(plan) { case e: ShuffleExchangeExec => e }.size == 1,
+      s"upsert must shuffle once, got:\n$plan")
+    assert(Plans.collect(plan) { case d: DeserializeToObjectExec => d }.isEmpty,
+      s"upsert must not deserialize records, got:\n$plan")
   }
 
   test("groupCorpus collects member ids into content-addressed MultiRecords") {

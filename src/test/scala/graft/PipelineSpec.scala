@@ -50,6 +50,47 @@ class PipelineSpec extends SparkSpec {
     assert(again.collect().forall(_.labelViews.contains("pos")))
   }
 
+  test("records outside the planning sample are annotated too") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val base = Files.createTempDirectory("graft-pipe-unsampled").toString
+    val in = s"$base/in"
+    val texts = (1 to 400).map(i => s"Document $i says hello to the world.")
+    val bare = Set(57, 211, 388).map(i => texts(i - 1))
+    val docs = texts.map(graft.model.Record.fresh(_)).toDS()
+    Sources.writeRecords(
+      AnnotationEngine.default.annotate(docs.filter(r => !bare(r.rawText)), M.POS)
+        .union(docs.filter(r => bare(r.rawText))).repartition(4), in)
+    val input = Sources.readRecords(spark, in)
+    // the layout is such that the seed-42 sample of 25 sees only records at POS
+    assert(AnnotationEngine.default.sample(input).collect().forall(r => !bare(r.rawText)))
+    assert(AnnotationEngine.default.planForCorpus(input, M.POS).isEmpty)
+    val recs = pipeline.run(spark, in, M.POS, s"$base/out").collect()
+    assert(recs.length == texts.size)
+    val missing = recs.filterNot(r => Set("tokens", "pos").subsetOf(r.viewNames))
+    assert(missing.isEmpty, s"${missing.length} records written without tokens and pos")
+  }
+
+  test("stale views are recomputed even when every record carries the view") {
+    import graft.model.Record
+    import graft.operators.Annotators
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val base = Files.createTempDirectory("graft-pipe-stale").toString
+    val in = s"$base/in"
+    val docs = (1 to 40).map(i => Record.fresh(s"Alice met Bob $i times in Paris.")).toDS()
+    val stale = AnnotationEngine.default.annotate(docs, M.POS).map(r =>
+      r.copy(labelViews = r.labelViews.updated("pos",
+        r.labelViews("pos").copy(source = "graft-pos-OLD"))))
+    Sources.writeRecords(stale, in)
+    val current = Annotators.registry(M.POS).source
+    assert(current != "graft-pos-OLD")
+    val recs = pipeline.run(spark, in, M.POS, s"$base/out").collect()
+    assert(recs.length == 40)
+    assert(recs.forall(_.viewSource("pos").contains(current)),
+      "every stale pos view must come out with the registry's current source")
+  }
+
   test("forced start consumes a foreign-source upstream view as-is (end-to-end)") {
     import graft.model.{Labeling, Record, Span}
     val base = Files.createTempDirectory("graft-pipe-forced").toString

@@ -13,11 +13,41 @@ class SourcesSpec extends SparkSpec {
     Files.writeString(dir.resolve("b.txt"), "second document text")
     Files.writeString(dir.resolve("dup.txt"), "first document text") // duplicate content
     Files.writeString(dir.resolve("empty.txt"), "")
+    // neither a file without the .txt suffix nor a .txt file in a plain
+    // subdirectory is a document
+    Files.writeString(dir.resolve("notes.md"), "not a document")
+    val sub = Files.createDirectory(dir.resolve("sub"))
+    Files.writeString(sub.resolve("nested.txt"), "nested document text")
     val ds = Sources.rawTextDir(spark, dir.toString)
     val recs = ds.collect()
-    assert(recs.length == 2, "empty rejected, duplicate collapsed by content hash")
+    assert(recs.map(_.rawText).toSet == Set("first document text", "second document text"),
+      "empty rejected, duplicate collapsed by content hash, only top-level .txt read")
     assert(recs.forall(r => r.identifier == Identifier.id(r.rawText, false)))
     assert(recs.forall(r => r.viewNames.isEmpty))
+  }
+
+  test("rawTextDir: empty dir is an empty corpus; missing dir and k=v subdirs fail") {
+    val empty = Files.createTempDirectory("graft-raw-empty")
+    assert(Sources.rawTextDir(spark, empty.toString).count() == 0)
+    val missing = intercept[org.apache.spark.SparkThrowable](
+      Sources.rawTextDir(spark, empty.resolve("missing").toString))
+    assert(missing.getCondition == "PATH_NOT_FOUND")
+    // a k=v subdirectory would read as a partition, and Spark would then
+    // read only the partition's files and drop the top-level documents
+    val kv = Files.createTempDirectory("graft-raw-kv")
+    Files.writeString(kv.resolve("a.txt"), "top-level document")
+    val part = Files.createDirectory(kv.resolve("lang=en"))
+    Files.writeString(part.resolve("b.txt"), "partition document")
+    val refused = intercept[IllegalArgumentException](Sources.rawTextDir(spark, kv.toString))
+    assert(refused.getMessage.contains("lang"))
+    // one level deeper, Spark's own partition discovery refuses the layout
+    val nested = Files.createTempDirectory("graft-raw-nested")
+    Files.writeString(nested.resolve("a.txt"), "top-level document")
+    val deep = Files.createDirectories(nested.resolve("plain").resolve("lang=en"))
+    Files.writeString(deep.resolve("b.txt"), "partition document")
+    val conflict = intercept[org.apache.spark.SparkThrowable](
+      Sources.rawTextDir(spark, nested.toString).collect())
+    assert(conflict.getCondition == "CONFLICTING_DIRECTORY_STRUCTURES")
   }
 
   test("fromTextColumn: column-form sha1 identity matches the Scala form") {

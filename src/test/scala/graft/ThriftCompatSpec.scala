@@ -67,6 +67,39 @@ class ThriftCompatSpec extends SparkSpec {
     }
   }
 
+  test("TBinaryProtocol layout of a minimal Record, hand-encoded (curator.thrift:29-44)") {
+    // struct Record { 1: string identifier, 2: string rawText,
+    //   3: map<string, Labeling> labelViews, 4: map<string, Clustering>
+    //   clusterViews, 5: map<string, Forest> parseViews,
+    //   6: map<string, View> views, 7: bool whitespaced }
+    // Binary protocol: a field is (type byte, i16 id, value); a string is
+    // (i32 length, UTF-8 bytes); a map is (key type, value type, i32 size);
+    // a struct ends with a STOP byte. All integers are big-endian.
+    val (tString, tMap, tBool, tStruct, tStop) = (11, 13, 2, 12, 0)
+    val out = new java.io.ByteArrayOutputStream
+    val data = new java.io.DataOutputStream(out)
+    def field(tpe: Int, id: Int): Unit = { data.writeByte(tpe); data.writeShort(id) }
+    def string(id: Int, v: String): Unit = {
+      field(tString, id)
+      val b = v.getBytes("UTF-8"); data.writeInt(b.length); data.write(b)
+    }
+    def emptyViewMap(id: Int): Unit = {
+      field(tMap, id); data.writeByte(tString); data.writeByte(tStruct); data.writeInt(0)
+    }
+    val expected = Record.fresh("Alice met Bob.", whitespaced = true)
+    string(1, expected.identifier)
+    string(2, expected.rawText)
+    (3 to 6).foreach(emptyViewMap)
+    field(tBool, 7); data.writeByte(1)
+    data.writeByte(tStop)
+    data.flush()
+    val bytes = out.toByteArray
+    val r = ThriftCompat.readRecord(bytes)
+    assert(r == expected)
+    assert(ThriftCompat.writeRecord(r).toSeq == bytes.toSeq,
+      "writing the decoded record back must give the same bytes")
+  }
+
   test("round-trip of engine-annotated records (all view kinds)") {
     val r0 = Record.fresh("Alice met Bob. Alice paid 42 dollars!")
     val full = Seq(M.WIKI, M.COREF, M.VERB_SRL, M.STANFORD_PARSE)
