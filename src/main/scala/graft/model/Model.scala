@@ -3,7 +3,6 @@ package graft.model
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, functions => F}
 
 /** The annotated-document data model.

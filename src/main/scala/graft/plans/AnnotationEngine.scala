@@ -12,11 +12,17 @@ import graft.operators.{AnnotationMode, Annotators, ViewOperator}
   * Execution model (SURVEY.md §3 "Spark shape of 3.1+3.2"): the reference's
   * chain of MapReduce jobs — one per dependency level, each with a full
   * shuffle — collapses here into a single narrow `mapPartitions` over one
-  * DataFrame lineage: read → annotate₁∘…∘annotateₖ → write, NO shuffle at
-  * all. At 100 TB this is the difference between k corpus-wide shuffles and
-  * zero; parallelism comes from parquet splits, and per-executor annotator
-  * state is amortized by partition (replacing the reference's per-node
-  * server-launch machinery, `CuratorReducer.java:209-378,633-703`).
+  * DataFrame lineage: read → annotate₁∘…∘annotateₖ → write, NO shuffle
+  * between the annotators. At 100 TB this is the difference between k
+  * corpus-wide shuffles and at most one. The pass runs in as many tasks as
+  * its input has partitions: input splits follow bytes, and a small corpus
+  * (or a `distinct` that adaptive execution coalesces) is one partition,
+  * while per-document NLP is CPU-bound. `Pipeline.run` therefore
+  * hash-partitions its input by `identifier` into
+  * `spark.sql.shuffle.partitions` partitions before calling [[annotate]].
+  * Per-executor annotator state is amortized by partition (replacing the
+  * reference's per-node server-launch machinery,
+  * `CuratorReducer.java:209-378,633-703`).
   */
 final class AnnotationEngine(val registry: Map[AnnotationMode, ViewOperator]) extends Serializable {
 

@@ -1,6 +1,8 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.model.Record
 import graft.operators.AnnotationMode
@@ -14,15 +16,23 @@ import graft.sources.{Sources, ThriftCompat}
   *      — `containsSerializedRecords`, D11;
   *   2. archive lookup: reuse stored annotated records by content hash
   *      (D15) when a store is given;
-  *   3. execute: ONE narrow annotate pass over every record (the
-  *      reference's chain of MapReduce jobs, shuffle-free here); each
-  *      record skips its fresh views and recomputes stale ones
-  *      (`Planner.provide`), and a user-forced start asserts its
-  *      dependencies present. No corpus-level plan gates the pass: a
-  *      sample cannot speak for the records outside it, and drawing one
-  *      evaluates the input a second time;
-  *   4. rotate any previous output (D18) and write the results;
+  *   3. execute: ONE annotate pass over every record (the reference's
+  *      chain of MapReduce jobs, one narrow stage here). The looked-up
+  *      input is hash-partitioned by `identifier` into
+  *      `spark.sql.shuffle.partitions` partitions first — the pass's
+  *      only shuffle — so per-record NLP, which is CPU-bound, runs in
+  *      every task slot whatever the input's bytes or splits (the
+  *      reference ran one reduce task per node partition,
+  *      `JobHandler.java:149-194`). Each record skips its fresh views and
+  *      recomputes stale ones (`Planner.provide`), and a user-forced
+  *      start asserts its dependencies present. No corpus-level plan
+  *      gates the pass: a sample cannot speak for the records outside it,
+  *      and drawing one evaluates the input a second time;
+  *   4. rotate any previous output (D18) and write the results flat,
+  *      one file per annotate task;
   *   5. commit: upsert the written results into the record store (D14).
+  *      The store is recovered from a crashed swap before it is probed,
+  *      and opened once for both the lookup and the upsert.
   *
   * Every step is lazy DataFrame composition — nothing materializes until
   * the final write, so Catalyst sees the whole pipeline at once.
@@ -39,14 +49,21 @@ final class Pipeline(engine: AnnotationEngine) {
     else
       Sources.rawTextDir(spark, inputDir)
 
+  /** Probe one regular, non-hidden file of `dir` on the driver, like the
+    * reference's `containsSerializedRecords`: does it decode as a Thrift
+    * `Record` with an identifier and text? */
   private def looksLikeThriftRecords(spark: SparkSession, dir: String): Boolean =
     try {
-      // probe one file, like the reference's containsSerializedRecords
-      val files = spark.read.format("binaryFile").load(dir)
-        .select("content").limit(1)
-        .collect()
-      files.nonEmpty && {
-        val r = ThriftCompat.readRecord(files.head.getAs[Array[Byte]](0))
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(p).find { st =>
+        val name = st.getPath.getName
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }.exists { st =>
+        val bytes = new Array[Byte](st.getLen.toInt)
+        val in = fs.open(st.getPath)
+        try in.readFully(bytes) finally in.close()
+        val r = ThriftCompat.readRecord(bytes)
         r.rawText.nonEmpty && r.identifier.nonEmpty
       }
     } catch { case _: Exception => false }
@@ -61,28 +78,30 @@ final class Pipeline(engine: AnnotationEngine) {
       storeDir: Option[String] = None,
       forcedStart: Option[AnnotationMode] = None): Dataset[Record] = {
     val fresh = ingest(spark, inputDir)
-    val input = storeDir.filter(Sources.containsSerializedRecords(spark, _)) match {
-      case Some(store) => Sources.lookup(fresh, Sources.readRecords(spark, store))
-      case None => fresh
+    val swap = storeDir.map { store =>
+      val p = new Path(store)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val (tmp, bak) = (new Path(store + "_tmp"), new Path(store + "_bak"))
+      // a crash in a previous run's swap may have left the store absent
+      // with the full copy in _tmp/_bak — restore before the probe, or the
+      // lookup finds no archive and recomputes every stored view
+      Sources.recoverSwap(fs, p, tmp, bak)
+      (fs, p, tmp, bak)
     }
-    val annotated = engine.annotate(input, target,
+    // opened once: the store's files do not change until the swap, so the
+    // lookup and the upsert share one listing
+    val stored = storeDir.filter(Sources.containsSerializedRecords(spark, _))
+      .map(Sources.readRecords(spark, _))
+    val input = stored.fold(fresh)(Sources.lookup(fresh, _))
+    // an explicit partition count is not coalesced by adaptive execution
+    val slots = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val annotated = engine.annotate(input.repartition(slots, col("identifier")), target,
       assumeFresh = Planner.assertedPresent(target, forcedStart))
     Sources.rotateOldOutput(spark, outputDir)
-    Sources.writeRecords(annotated, outputDir, idPrefixPartitions = true)
+    Sources.writeRecords(annotated, outputDir)
     val result = Sources.readRecords(spark, outputDir)
-    storeDir.foreach { store =>
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(store)
-      val fs = p.getFileSystem(hconf)
-      val tmp = new org.apache.hadoop.fs.Path(store + "_tmp")
-      val bak = new org.apache.hadoop.fs.Path(store + "_bak")
-      // a crash in a previous run's swap may have left the store absent
-      // with the full copy in _tmp/_bak — restore before the probe
-      Sources.recoverSwap(fs, p, tmp, bak)
-      val merged =
-        if (Sources.containsSerializedRecords(spark, store))
-          Sources.upsert(Sources.readRecords(spark, store), result)
-        else result
+    swap.foreach { case (fs, p, tmp, bak) =>
+      val merged = stored.fold(result)(Sources.upsert(_, result))
       // write-then-swap: never read and overwrite the same path in one
       // job, and keep a full store copy alive at every step
       Sources.swapInPlace(fs, p, tmp, bak)(Sources.writeRecords(merged, _))

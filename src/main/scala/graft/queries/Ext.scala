@@ -3630,7 +3630,7 @@ object Ext {
     * by centroid-id rank and the code-keyed codebook — exactly
     * trainPq / encodePq's construction, so Spark and DuckDB agree on
     * every code bit-for-bit. */
-  private def pqSubspaceCtes(j: Int, dsub: Int, ksub: Int, src: String = "v"): String = {
+  private def pqSubspaceCtes(j: Int, dsub: Int, ksub: Int, src: String): String = {
     val a = j * dsub + 1
     val b = (j + 1) * dsub
     s"""v$j AS (SELECT vec_id, v[$a:$b] AS v FROM $src),

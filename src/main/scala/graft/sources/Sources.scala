@@ -11,9 +11,10 @@ import graft.model.{Identifier, Record}
   * The engine-native store is Parquet — columnar and splittable, so reading
   * `identifier` plus one view does not deserialize parse forests (impossible
   * in the reference's monolithic one-Thrift-file-per-document layout,
-  * `HadoopCuratorClient.java:83-104`). Scale: writes are partitioned by the
-  * leading hex nibbles of the content hash, giving uniformly-sized partitions
-  * at any corpus size.
+  * `HadoopCuratorClient.java:83-104`). Scale: a write can be laid out in
+  * cells by the leading hex nibble of the content hash, uniformly sized at
+  * any corpus size (the incremental streaming sink's layout); readers take
+  * flat and celled directories alike.
   */
 object Sources {
 
@@ -123,9 +124,17 @@ object Sources {
     out.mode(mode).parquet(path)
   }
 
+  /** D7: read a record directory, flat or in `id_prefix=` cells, with the
+    * known `Record` schema: no schema-inference job, and the driver lists
+    * the directory once, when the Dataset is made. Partition discovery
+    * still appends the `id_prefix` column, which is dropped. An empty
+    * directory reads as an empty corpus rather than failing inference, so
+    * callers that must tell a record directory from anything else gate on
+    * [[containsSerializedRecords]] first. */
   def readRecords(spark: SparkSession, path: String): Dataset[Record] = {
     import spark.implicits._
-    spark.read.parquet(path).drop("id_prefix").as[Record]
+    spark.read.schema(Encoders.product[Record].schema).parquet(path)
+      .drop("id_prefix").as[Record]
   }
 
   /** Compact a record store to ~`targetBytes` files. Long-lived archives
@@ -307,20 +316,35 @@ object Sources {
 
   /** D11: input-kind detection — does a directory hold serialized records or
     * raw text? Probe-read like `JobHandler.containsSerializedRecords`
-    * (468-482): try the parquet record schema on one file. */
+    * (468-482): look for the `identifier` and `rawText` columns in the
+    * Parquet footer of one data file (top level or inside a partition
+    * directory), read on the driver without a Spark job. A directory
+    * that is missing, unreadable or without a `.parquet` data file is
+    * not one. */
   def containsSerializedRecords(spark: SparkSession, dir: String): Boolean =
     try {
-      // cheap layout probe first so raw-text dirs don't spam footer errors
+      val hconf = spark.sparkContext.hadoopConfiguration
       val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val looksParquet = fs.exists(p) && fs.listStatus(p).exists { st =>
-        st.getPath.getName.endsWith(".parquet") ||
-          st.getPath.getName.startsWith("id_prefix=") ||
-          st.getPath.getName == "_SUCCESS"
-      }
-      looksParquet && {
-        val df = spark.read.parquet(dir)
-        Seq("identifier", "rawText").forall(df.columns.contains)
+      val fs = p.getFileSystem(hconf)
+      firstParquetFile(fs, p).exists { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf))
+        try {
+          val schema = reader.getFooter.getFileMetaData.getSchema
+          Seq("identifier", "rawText").forall(schema.containsField)
+        } finally reader.close()
       }
     } catch { case _: Exception => false }
+
+  /** First `.parquet` data file under `dir`, descending only into
+    * directories Spark would read (not `_`- or `.`-prefixed). */
+  private def firstParquetFile(
+      fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
+    val (dirs, files) = fs.listStatus(dir).toSeq
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .partition(_.isDirectory)
+    files.map(_.getPath).find(_.getName.endsWith(".parquet"))
+      .orElse(dirs.iterator.flatMap(d => firstParquetFile(fs, d.getPath)).nextOption())
+  }
 }

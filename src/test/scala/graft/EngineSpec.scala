@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.model._
-import graft.operators.{AnnotationMode => M, Annotators, ViewOperator}
+import graft.operators.{AnnotationMode => M, ViewOperator}
 import graft.plans.AnnotationEngine
 import graft.sources.Sources
 
@@ -159,7 +159,11 @@ class EngineSpec extends SparkSpec {
     stored.toDS().toDF().select(shuffledCols.map(org.apache.spark.sql.functions.col): _*)
       .write.parquet(s"$base/store")
     Sources.writeRecords(corpus, s"$base/updates")
-    val storeDs = Sources.readRecords(spark, s"$base/store")
+    // readRecords reads with the Record schema, whatever the files' order
+    assert(Sources.readRecords(spark, s"$base/store").columns.toSeq ==
+      org.apache.spark.sql.Encoders.product[Record].schema.fieldNames.toSeq)
+    // a Dataset[Record] whose columns keep the files' order merges the same
+    val storeDs = spark.read.parquet(s"$base/store").as[Record]
     assert(storeDs.columns.toSeq == shuffledCols)
     val merged2 = Sources.upsert(storeDs, Sources.readRecords(spark, s"$base/updates"))
     assert(merged2.collect().sortBy(_.identifier).toSeq == stored.sortBy(_.identifier),

@@ -2,9 +2,18 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.{AnnotationMode => M}
+import graft.model.Record
+import graft.operators.{AnnotationFailedException, Annotators, ViewOperator, AnnotationMode => M}
 import graft.plans.{AnnotationEngine, Pipeline}
 import graft.sources.Sources
+
+/** An operator that claims a registered operator's mode and version, so
+  * every view that operator made is fresh to it, and fails on any record
+  * that reaches it. */
+final class FailingOperator(val mode: M, val version: String) extends ViewOperator {
+  def apply(r: Record): Record =
+    throw new AnnotationFailedException(s"${mode.name} reached ${r.identifier}")
+}
 
 class PipelineSpec extends SparkSpec {
 
@@ -32,6 +41,22 @@ class PipelineSpec extends SparkSpec {
       "reference fixtures not available")
     val ds = pipeline.ingest(spark, "/root/reference/samplejob/serialized")
     assert(ds.collect().forall(_.labelViews.contains("tokens")))
+  }
+
+  test("input typing probes one file on the driver: Thrift and raw text, no Spark job") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val thrift = Files.createTempDirectory("graft-pipe-thrift").toString + "/t"
+    val recs = Seq("Alice met Bob.", "Bob met Carol in Rome.").map(Record.fresh(_))
+    graft.sources.ThriftCompat.writeThriftDir(
+      AnnotationEngine.default.annotate(recs.toDS(), M.TOKEN), thrift)
+    val raw = rawDir()
+    val (kinds, sites) = jobCallSites(Seq(thrift, raw).map(pipeline.ingest(spark, _)))
+    assert(sites.isEmpty, s"typing the input started ${sites.size} Spark job(s)")
+    val fromThrift = kinds.head.collect()
+    assert(fromThrift.map(_.identifier).sorted.toSeq == recs.map(_.identifier).sorted)
+    assert(fromThrift.forall(_.labelViews.contains("tokens")))
+    assert(kinds(1).collect().forall(_.viewNames.isEmpty), "raw text ingests as fresh records")
   }
 
   test("second run reuses the store: corpus plan is empty, views survive") {
@@ -126,5 +151,45 @@ class PipelineSpec extends SparkSpec {
     val stored = Sources.readRecords(spark, store).collect()
     assert(stored.forall(_.labelViews.contains("wikifier")),
       "store must hold the richer (WIKI) records after upsert")
+  }
+
+  test("annotate runs in every shuffle partition and record dirs are read without a job") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val base = Files.createTempDirectory("graft-pipe-slots").toString
+    val in = s"$base/in"; val out = s"$base/out"; val store = s"$base/store"
+    val docs = (1 to 80).map(i => Record.fresh(s"Record $i meets record ${i + 1} today."))
+    // one Parquet file: one input split, so the pass's tasks come from the shuffle
+    Sources.writeRecords(docs.toDS().coalesce(1), in)
+    pipeline.run(spark, in, M.TOKEN, s"$base/seed", storeDir = Some(store))
+    val (recs, sites) = jobCallSites(
+      pipeline.run(spark, in, M.POS, out, storeDir = Some(store)).collect())
+    assert(recs.length == docs.size)
+    assert(recs.forall(r => Set("tokens", "pos").subsetOf(r.viewNames)))
+    val slots = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val written = new java.io.File(out).listFiles.toSeq
+    assert(written.count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) == slots,
+      s"one output file per annotate task: ${written.map(_.getName).sorted}")
+    assert(!written.exists(_.getName.startsWith("id_prefix=")), "the output is written flat")
+    val probing = sites.filter(s =>
+      s.contains("Sources$.readRecords(") || s.contains("Sources$.containsSerializedRecords("))
+    assert(probing.isEmpty, s"record dirs opened with a Spark job:\n${probing.mkString("\n--\n")}")
+  }
+
+  test("a store left in _bak by a crashed swap is recovered before the archive lookup") {
+    val base = Files.createTempDirectory("graft-pipe-recover").toString
+    val store = s"$base/store"
+    val in = rawDir()
+    pipeline.run(spark, in, M.POS, s"$base/o1", storeDir = Some(store))
+    // the crash window of swapInPlace: the live store moved aside, the new
+    // copy not yet promoted
+    assert(new java.io.File(store).renameTo(new java.io.File(store + "_bak")))
+    val failingPos = new FailingOperator(M.POS, Annotators.registry(M.POS).version)
+    val recs = new Pipeline(AnnotationEngine.default.withOperator(failingPos))
+      .run(spark, in, M.POS, s"$base/o2", storeDir = Some(store)).collect()
+    assert(recs.length == 2)
+    assert(recs.forall(_.viewSource("pos").contains(failingPos.source)),
+      "every record must come from the archive with its stored POS view")
+    assert(new java.io.File(store).isDirectory && !new java.io.File(store + "_bak").exists)
   }
 }

@@ -464,7 +464,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("quantizer memo fingerprints LocalRelation leaves: residual " +
     "codebooks memoize, distinct literal centroids never alias") {
-    import org.apache.spark.sql.functions._
     def codebook(df: org.apache.spark.sql.DataFrame) =
       Similarity.trainPq(df, m = 2, ksub = 2, iters = 1).collect()
         .map(_.toString).sorted.toSeq

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.Encoders
+
 import graft.model.{Identifier, Record}
 import graft.sources.Sources
 
@@ -64,11 +66,19 @@ class SourcesSpec extends SparkSpec {
     val ds = spark.createDataset(recs)
     val out = Files.createTempDirectory("graft-store").toString + "/t"
     Sources.writeRecords(ds, out, idPrefixPartitions = true)
-    val back = Sources.readRecords(spark, out).collect()
+    // the Record schema is known: opening the dir runs no inference job
+    val (read, sites) = jobCallSites(Sources.readRecords(spark, out))
+    assert(sites.isEmpty, s"opening the dir started ${sites.size} Spark job(s)")
+    assert(read.columns.toSeq == Encoders.product[Record].schema.fieldNames.toSeq)
+    val back = read.collect()
     assert(back.sortBy(_.identifier).toSeq == recs.sortBy(_.identifier))
     // partition dirs exist (hash-prefix layout)
     val parts = new java.io.File(out).listFiles().filter(_.getName.startsWith("id_prefix="))
     assert(parts.nonEmpty)
+    // an empty dir reads as an empty corpus; the record probe tells it apart
+    val empty = Files.createTempDirectory("graft-store-empty").toString
+    assert(Sources.readRecords(spark, empty).count() == 0)
+    assert(!Sources.containsSerializedRecords(spark, empty))
   }
 
   test("old-output rotation moves existing dir aside (D18)") {
@@ -90,11 +100,20 @@ class SourcesSpec extends SparkSpec {
     import spark.implicits._
     val recDir = Files.createTempDirectory("graft-kind").toString + "/recs"
     spark.createDataset(Seq(Record.fresh("abc"))).write.parquet(recDir)
-    assert(Sources.containsSerializedRecords(spark, recDir))
+    val celledDir = Files.createTempDirectory("graft-kind-cells").toString + "/recs"
+    Sources.writeRecords(spark.createDataset((1 to 20).map(i => Record.fresh(s"doc $i"))),
+      celledDir, idPrefixPartitions = true)
     val plainDir = Files.createTempDirectory("graft-kind2").toString + "/plain"
     Seq(("x", 1)).toDF("a", "b").write.parquet(plainDir)
-    assert(!Sources.containsSerializedRecords(spark, plainDir))
-    assert(!Sources.containsSerializedRecords(spark, "/nonexistent/dir"))
+    val docsDir = Files.createTempDirectory("graft-kind-docs").toString + "/documents"
+    Seq((1L, "a documents-shaped table")).toDF("doc_id", "text").write.parquet(docsDir)
+    val rawDir = Files.createTempDirectory("graft-kind-raw")
+    Files.writeString(rawDir.resolve("a.txt"), "raw document text")
+    val dirs = Seq(recDir, celledDir, plainDir, docsDir, rawDir.toString, "/nonexistent/dir")
+    // the probe reads one Parquet footer on the driver, with no Spark job
+    val (kinds, sites) = jobCallSites(dirs.map(Sources.containsSerializedRecords(spark, _)))
+    assert(kinds == Seq(true, true, false, false, false, false))
+    assert(sites.isEmpty, s"the probe started ${sites.size} Spark job(s)")
   }
 
   test("store compaction rewrites many small files into few, content intact") {

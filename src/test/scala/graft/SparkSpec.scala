@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,4 +24,22 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Run `body` and return what it gave with the long call site (the
+    * driver stack) of every Spark job it started. */
+  def jobCallSites[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        sites.add(j.stageInfos.map(_.details).mkString("\n"))
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      ListenerBusAccess.drain(sc)
+      (a, sites.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }

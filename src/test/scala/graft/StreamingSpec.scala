@@ -899,7 +899,6 @@ class StreamingSpec extends SparkSpec {
 
   test("replay harnesses are schedule-independent: emitted sets are a " +
     "property of the data, not the batch split") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // sessions: 3 users, gaps straddling the 15-min default
     val ev = Seq(

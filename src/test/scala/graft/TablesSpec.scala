@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.Row
 
 /** The physical layout of the driver's `events.ts` column has changed
   * between testdata generations — TIMESTAMP(NANOS) (read as LongType under

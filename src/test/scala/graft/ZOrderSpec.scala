@@ -44,7 +44,6 @@ class ZOrderSpec extends SparkSpec {
     // (locality in the SECOND dimension), under row-major (a,b) sort a
     // block spans b's whole range. This is precisely why row-group
     // min/max stats can prune 2-D boxes on a z-ordered layout.
-    import spark.implicits._
     val grid = for { a <- 0L until 64L; b <- 0L until 64L } yield (a, b)
     def bandsPerBlock(sorted: Seq[(Long, Long)]): Double = {
       val blocks = sorted.grouped(256).toSeq
