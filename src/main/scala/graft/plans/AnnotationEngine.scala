@@ -33,18 +33,25 @@ final class AnnotationEngine(val registry: Map[AnnotationMode, ViewOperator]) ex
   /** Annotate a corpus up to `target`, skipping fresh views, recomputing
     * stale ones plus (sticky cascade) their dependents. One narrow stage.
     * `assumeFresh` modes (a forced-start assertion) are never recomputed,
-    * even when their stored `source` differs from the registry's. */
+    * even when their stored `source` differs from the registry's.
+    * With `richestPerId`, each partition is sorted by `identifier` and
+    * only the richest copy of each identifier in it is annotated and
+    * emitted ([[AnnotationEngine.richestOfRuns]]): on input hash-partitioned
+    * by `identifier`, the output holds one record per identifier. The sort
+    * is local, no exchange. */
   def annotate(
       ds: Dataset[Record],
       target: AnnotationMode,
       force: Boolean = false,
-      assumeFresh: Set[AnnotationMode] = Set.empty): Dataset[Record] = {
+      assumeFresh: Set[AnnotationMode] = Set.empty,
+      richestPerId: Boolean = false): Dataset[Record] = {
     val order = Planner.chain(target)
     val reg = registry
     implicit val enc = ds.encoder
-    ds.mapPartitions { it =>
+    val in = if (richestPerId) ds.sortWithinPartitions("identifier") else ds
+    in.mapPartitions { it =>
       val f = Planner.provide(reg, order, force, assumeFresh) _
-      it.map(f)
+      (if (richestPerId) AnnotationEngine.richestOfRuns(it) else it).map(f)
     }
   }
 
@@ -151,6 +158,29 @@ final class AnnotationEngine(val registry: Map[AnnotationMode, ViewOperator]) ex
 object AnnotationEngine {
   /** Engine with the default deterministic operator registry. */
   val default: AnnotationEngine = new AnnotationEngine(Annotators.registry)
+
+  /** The richest record of each run of equal identifiers in `it`, in
+    * `Sources.upsert`'s order: most view names, then the smallest sorted
+    * name list. A run of one record passes through without comparing. */
+  def richestOfRuns(it: Iterator[Record]): Iterator[Record] = {
+    val in = it.buffered
+    def names(r: Record) = r.viewNames.toSeq.sorted.mkString(",")
+    def richer(a: Record, b: Record) = {
+      val (na, nb) = (a.viewNames.size, b.viewNames.size)
+      na > nb || (na == nb && names(a) < names(b))
+    }
+    new Iterator[Record] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Record = {
+        var best = in.next()
+        while (in.hasNext && in.head.identifier == best.identifier) {
+          val r = in.next()
+          if (richer(r, best)) best = r
+        }
+        best
+      }
+    }
+  }
 
   /** Typed view over a record DataFrame. */
   def records(spark: SparkSession, path: String): Dataset[Record] = {

@@ -23,16 +23,24 @@ import graft.sources.{Sources, ThriftCompat}
   *      only shuffle — so per-record NLP, which is CPU-bound, runs in
   *      every task slot whatever the input's bytes or splits (the
   *      reference ran one reduce task per node partition,
-  *      `JobHandler.java:149-194`). Each record skips its fresh views and
+  *      `JobHandler.java:149-194`). A record directory can hold an
+  *      identifier more than once, so for one the pass sorts each
+  *      partition by `identifier` and keeps the richest copy of each (raw
+  *      text is distinct on ingest and takes no sort): the output holds
+  *      one record per identifier. Each record skips its fresh views and
   *      recomputes stale ones (`Planner.provide`), and a user-forced
   *      start asserts its dependencies present. No corpus-level plan
   *      gates the pass: a sample cannot speak for the records outside it,
   *      and drawing one evaluates the input a second time;
   *   4. rotate any previous output (D18) and write the results flat,
   *      one file per annotate task;
-  *   5. commit: upsert the written results into the record store (D14).
-  *      The store is recovered from a crashed swap before it is probed,
-  *      and opened once for both the lookup and the upsert.
+  *   5. commit (D14): the written output supersedes the stored records
+  *      it was computed from — every output record was looked up in the
+  *      store in step 2 and only gained or refreshed views — so the new
+  *      store is the output plus the stored records whose identifier it
+  *      lacks (`Sources.supersede`), without a whole-record shuffle. The
+  *      store is recovered from a crashed swap before it is probed, and
+  *      opened once for both the lookup and the commit.
   *
   * Every step is lazy DataFrame composition — nothing materializes until
   * the final write, so Catalyst sees the whole pipeline at once.
@@ -42,12 +50,17 @@ final class Pipeline(engine: AnnotationEngine) {
   /** Ingest a directory: serialized record corpus (parquet or reference
     * Thrift layout) or raw `.txt` documents. */
   def ingest(spark: SparkSession, inputDir: String): Dataset[Record] =
+    ingestKind(spark, inputDir)._1
+
+  /** The ingested corpus, and whether it came from a record directory,
+    * where an identifier can repeat (raw-text ingest is distinct). */
+  private def ingestKind(spark: SparkSession, inputDir: String): (Dataset[Record], Boolean) =
     if (Sources.containsSerializedRecords(spark, inputDir))
-      Sources.readRecords(spark, inputDir)
+      (Sources.readRecords(spark, inputDir), true)
     else if (looksLikeThriftRecords(spark, inputDir))
-      ThriftCompat.readThriftDir(spark, inputDir)
+      (ThriftCompat.readThriftDir(spark, inputDir), true)
     else
-      Sources.rawTextDir(spark, inputDir)
+      (Sources.rawTextDir(spark, inputDir), false)
 
   /** Probe one regular, non-hidden file of `dir` on the driver, like the
     * reference's `containsSerializedRecords`: does it decode as a Thrift
@@ -69,7 +82,7 @@ final class Pipeline(engine: AnnotationEngine) {
     } catch { case _: Exception => false }
 
   /** Full run. Returns the annotated corpus (already written to `outputDir`
-    * and, when given, upserted into `storeDir`). */
+    * and, when given, committed to `storeDir`). */
   def run(
       spark: SparkSession,
       inputDir: String,
@@ -77,7 +90,7 @@ final class Pipeline(engine: AnnotationEngine) {
       outputDir: String,
       storeDir: Option[String] = None,
       forcedStart: Option[AnnotationMode] = None): Dataset[Record] = {
-    val fresh = ingest(spark, inputDir)
+    val (fresh, recordInput) = ingestKind(spark, inputDir)
     val swap = storeDir.map { store =>
       val p = new Path(store)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -89,19 +102,20 @@ final class Pipeline(engine: AnnotationEngine) {
       (fs, p, tmp, bak)
     }
     // opened once: the store's files do not change until the swap, so the
-    // lookup and the upsert share one listing
+    // lookup and the commit share one listing
     val stored = storeDir.filter(Sources.containsSerializedRecords(spark, _))
       .map(Sources.readRecords(spark, _))
     val input = stored.fold(fresh)(Sources.lookup(fresh, _))
     // an explicit partition count is not coalesced by adaptive execution
     val slots = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val annotated = engine.annotate(input.repartition(slots, col("identifier")), target,
-      assumeFresh = Planner.assertedPresent(target, forcedStart))
+      assumeFresh = Planner.assertedPresent(target, forcedStart),
+      richestPerId = recordInput)
     Sources.rotateOldOutput(spark, outputDir)
     Sources.writeRecords(annotated, outputDir)
     val result = Sources.readRecords(spark, outputDir)
     swap.foreach { case (fs, p, tmp, bak) =>
-      val merged = stored.fold(result)(Sources.upsert(_, result))
+      val merged = stored.fold(result)(Sources.supersede(_, result))
       // write-then-swap: never read and overwrite the same path in one
       // job, and keep a full store copy alive at every step
       Sources.swapInPlace(fs, p, tmp, bak)(Sources.writeRecords(merged, _))

@@ -14,9 +14,9 @@ import org.apache.spark.sql.DataFrame
   * `sortBy` additionally key-sorts each bucket file, so sort-merge join
   * skips its per-task sort (and per-key scans can range-skip).
   *
-  * The same write shape serves the record store: bucketing by `identifier`
-  * co-locates the archive-lookup join (D15) and upsert (D14) with zero
-  * shuffle on the store side.
+  * The buckets apply only to reads through the catalog table
+  * (`spark.table`): `Sources.readRecords` reads a record store by path, so
+  * the archive lookup (D15) and upsert (D14) see no bucket spec.
   */
 object Bucketing {
 

@@ -194,10 +194,10 @@ object Sources {
     val spark = incoming.sparkSession
     import spark.implicits._
     // column-level (no typed map): the join key stays the scanned
-    // `identifier` column, so a store written with
-    // Bucketing.writeBucketed(..., keys = identifier) joins with NO
-    // exchange on the store side — the archive (the big side at 100 TB)
-    // never reshuffles; only the incoming batch does
+    // `identifier` column. The store is read by path (readRecords), so no
+    // bucket spec applies even to one written with Bucketing.writeBucketed:
+    // a store too big to broadcast is shuffled by `identifier`, whole
+    // records and all, like the incoming batch
     def keyed(ds: Dataset[Record], name: String) = {
       val df = ds.toDF()
       df.select(col("identifier").as("id"),
@@ -212,7 +212,10 @@ object Sources {
   /** D14: archive upsert — a record replaces its stored version iff it
     * carries MORE views (`CuratorClient.informDatabaseOfUpdatedRecords`,
     * 581-651): the richer side wins, and on equal richness the stored
-    * record stays.
+    * record stays. For updates that were NOT computed from the stored
+    * record: the streaming record-store sinks (`Streams.recordUpsertSink`
+    * and its incremental form) call it. `Pipeline.run` commits with
+    * [[supersede]] instead, since its output was computed from the store.
     *
     * Updates may carry the same identifier more than once (a micro-batch
     * that saw a document twice): the richest of them is the candidate —
@@ -248,6 +251,23 @@ object Sources {
       .withColumn("rank", row_number().over(first))
       .filter(col("rank") === 1)
       .select("r.*").as[Record]
+  }
+
+  /** D14 for a run computed from the store: every `output` record
+    * replaces its stored version, and the stored records the run did not
+    * touch are carried over as they are. `output` must hold one record per
+    * identifier, each computed from its stored version (`Pipeline.run`
+    * looks every input up in the store and only adds or refreshes views),
+    * so it already holds every stored view, with stale ones refreshed —
+    * where [[upsert]]'s richer-wins rule would keep a stale stored record
+    * over an output of equal depth.
+    *
+    * The left-anti join reads only `output`'s `identifier` column: broadcast
+    * when it is small, there is no shuffle, and the store's records are
+    * written from the tasks that scan them. */
+  def supersede(store: Dataset[Record], output: Dataset[Record]): Dataset[Record] = {
+    val untouched = store.join(output.select("identifier"), Seq("identifier"), "left_anti")
+    output.unionByName(untouched.as(store.encoder))
   }
 
   /** D18: old-output rotation — move an existing output dir aside into

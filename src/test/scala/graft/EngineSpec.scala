@@ -179,6 +179,21 @@ class EngineSpec extends SparkSpec {
       s"upsert must not deserialize records, got:\n$plan")
   }
 
+  test("richestOfRuns picks what upsert picks among copies of one id") {
+    import spark.implicits._
+    val eng = AnnotationEngine.default
+    val (a, b) = (Record.fresh(docs(0)), Record.fresh(docs(1)))
+    val tok = eng.annotate(Seq(a).toDS(), M.TOKEN).head()
+    val pos = eng.annotate(Seq(a).toDS(), M.POS).head()
+    // equal richness: the smaller sorted view-name list wins
+    def extra(name: String) = tok.copy(views = Map(name -> GView(Nil, Nil, "test", 1.0)))
+    val (x, y) = (extra("x-view"), extra("y-view"))
+    for (run <- Seq(Seq(tok, pos, a), Seq(a, tok), Seq(y, x), Seq(x, y))) {
+      val upserted = Sources.upsert(spark.emptyDataset[Record], run.toDS()).collect().toSeq
+      assert(AnnotationEngine.richestOfRuns((run :+ b).iterator).toSeq == upserted :+ b)
+    }
+  }
+
   test("groupCorpus collects member ids into content-addressed MultiRecords") {
     import spark.implicits._
     val recs = Seq("alpha doc one.", "beta doc two.", "alpha doc three.")

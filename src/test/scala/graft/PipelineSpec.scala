@@ -143,6 +143,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("store upsert widens records on a deeper annotation run") {
+    val sparkSession = spark
+    import sparkSession.implicits._
     val base = Files.createTempDirectory("graft-pipe-upsert").toString
     val store = s"$base/store"
     val in = rawDir()
@@ -151,6 +153,60 @@ class PipelineSpec extends SparkSpec {
     val stored = Sources.readRecords(spark, store).collect()
     assert(stored.forall(_.labelViews.contains("wikifier")),
       "store must hold the richer (WIKI) records after upsert")
+
+    // a record input holding one id twice, bare and at TOKEN, run to TOKEN
+    // against that store, which holds only ids absent from the input
+    val bare = Record.fresh("Carol saw Dave near the river.")
+    val tokenized = AnnotationEngine.default.annotate(Seq(bare).toDS(), M.TOKEN).head()
+    val dup = s"$base/dup"
+    Sources.writeRecords(Seq(bare, tokenized).toDS().repartition(2), dup)
+    // the bare copy would reach this operator: only the richer copy may be annotated
+    val failingTok = new FailingOperator(M.TOKEN, Annotators.registry(M.TOKEN).version)
+    val out = new Pipeline(AnnotationEngine.default.withOperator(failingTok))
+      .run(spark, dup, M.TOKEN, s"$base/o3", storeDir = Some(store)).collect()
+    assert(out.toSeq == Seq(tokenized), "the output holds the id once, at the richer record")
+    val after = Sources.readRecords(spark, store).collect()
+    assert(after.filter(_.identifier == bare.identifier).toSeq == Seq(tokenized),
+      "the store holds the id once, at the richer record")
+    assert(after.filter(_.identifier != bare.identifier).sortBy(_.identifier).toSeq ==
+      stored.sortBy(_.identifier).toSeq, "stored records absent from the input are carried over")
+  }
+
+  test("a stale view refreshed at equal depth reaches the store") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val base = Files.createTempDirectory("graft-pipe-refresh").toString
+    val in = s"$base/in"; val store = s"$base/store"
+    val docs = (1 to 20).map(i => Record.fresh(s"Alice met Bob $i times in Rome.")).toDS()
+    Sources.writeRecords(docs, in)
+    Sources.writeRecords(AnnotationEngine.default.annotate(docs, M.POS).map(r =>
+      r.copy(labelViews = r.labelViews.updated("pos",
+        r.labelViews("pos").copy(source = "graft-pos-OLD")))), store)
+    pipeline.run(spark, in, M.POS, s"$base/o1", storeDir = Some(store))
+    val current = Annotators.registry(M.POS)
+    val stored = Sources.readRecords(spark, store).collect()
+    assert(stored.length == 20)
+    assert(stored.forall(_.viewSource("pos").contains(current.source)),
+      "the refreshed POS views must replace the stale stored ones")
+    // so the next run finds every POS view fresh
+    val failingPos = new FailingOperator(M.POS, current.version)
+    val recs = new Pipeline(AnnotationEngine.default.withOperator(failingPos))
+      .run(spark, in, M.POS, s"$base/o2", storeDir = Some(store)).collect()
+    assert(recs.length == 20)
+  }
+
+  test("a store-backed run over record input shuffles once: the commit adds no exchange") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val base = Files.createTempDirectory("graft-pipe-commit").toString
+    val in = s"$base/in"; val store = s"$base/store"
+    Sources.writeRecords(
+      (1 to 40).map(i => Record.fresh(s"Dave sent $i letters to Erin.")).toDS(), in)
+    pipeline.run(spark, in, M.TOKEN, s"$base/o1", storeDir = Some(store))
+    val (recs, stages) = shuffleWritingStages(
+      pipeline.run(spark, in, M.POS, s"$base/o2", storeDir = Some(store)).collect())
+    assert(recs.length == 40)
+    assert(stages == 1, s"$stages stages wrote shuffle bytes; the identifier repartition is the only one")
   }
 
   test("annotate runs in every shuffle partition and record dirs are read without a job") {

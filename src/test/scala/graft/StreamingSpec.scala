@@ -163,7 +163,6 @@ class StreamingSpec extends SparkSpec {
     // the data advance the watermark so every real user's final session
     // times out and closes — after that, parity is over the FULL
     // session set (sentinel user excluded).
-    implicit val sq = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val evts = graft.Tables.t(spark, "/root/testdata/sf0.001", "events")
@@ -800,9 +799,8 @@ class StreamingSpec extends SparkSpec {
       // random split preserving order: 3-6 non-empty batches
       val cuts = rnd.shuffle((1 until updates.size).toList)
         .take(2 + rnd.nextInt(4)).sorted
-      val batches = (List(0) ++ cuts ++ List(updates.size)).sliding(2).map {
-        case List(a, b) => updates.slice(a, b)
-      }.toList
+      val bounds = List(0) ++ cuts ++ List(updates.size)
+      val batches = bounds.zip(bounds.tail).map { case (a, b) => updates.slice(a, b) }
       val base = java.nio.file.Files.createTempDirectory(s"graft_prop_$seed").toString
       val store = base + "/store"; val ckpt = base + "/ckpt"
       val ms = MemoryStream[(String, Int)]
