@@ -584,13 +584,15 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val sha = Provenance.gitSha()
     val ts = Provenance.nowIso
-    val memo = s"""{"hits":${graft.operators.Similarity.memoHits.get},"misses":${graft.operators.Similarity.memoMisses.get},"size":${graft.operators.Similarity.memoSize}}"""
-    val pairs = s"""{"hits":${graft.plans.PairGraphCache.hits.get},"misses":${graft.plans.PairGraphCache.misses.get},"size":${graft.plans.PairGraphCache.size}}"""
+    val artifacts = {
+      import graft.plans.SessionArtifacts.{hits, misses, size}
+      s"""{"hits":${hits.get},"misses":${misses.get},"size":$size}"""
+    }
     // Line 1: full diagnostics — every raw run and probe, so a polluted
     // artifact stays self-identifying. This line can run ~8KB and may be
     // truncated by the driver's tail capture; that is fine, it is for
     // humans and post-hoc audit.
-    println(s"""{"metric":"diagnostics","sf":"$sfDir","sha":"$sha","ts":"$ts","probe_ref":${num(probeRef)},"cooldown_sec":${num(cooldownSpent)},"memo":$memo,"pair_cache":$pairs,"revalidated":${strArr(revalidated.toSeq)},"post_hot":${strArr(postHot.toSeq.sorted)},"regr_candidates":${strArr(candidates)},"raw":$raw}""")
+    println(s"""{"metric":"diagnostics","sf":"$sfDir","sha":"$sha","ts":"$ts","probe_ref":${num(probeRef)},"cooldown_sec":${num(cooldownSpent)},"artifacts":$artifacts,"revalidated":${strArr(revalidated.toSeq)},"post_hot":${strArr(postHot.toSeq.sorted)},"regr_candidates":${strArr(candidates)},"raw":$raw}""")
     // Line 2..k: the per-query map, split into self-contained tagged
     // fragments of <= 1.5KB each (round-18, verdict item 1). The old
     // single >2KB line always lost its HEAD to the driver's 2KB tail

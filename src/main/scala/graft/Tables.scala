@@ -20,7 +20,7 @@ object Tables {
     // file-listing + footer/schema resolution for an identical immutable
     // lazy plan. The memo hands back the same DataFrame object — pure
     // plan reuse, no data or results are cached; staleness shares the
-    // regenerate-inputs-in-place seam (Similarity.memoClear → tClear),
+    // regenerate-inputs-in-place seam (SessionArtifacts.clear → tClear),
     // and Verify/Bench are one-JVM-per-run over static inputs.
     val key = (s, dir, n)
     val cached = tMemo.get(key)
@@ -36,8 +36,8 @@ object Tables {
   private val tMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
-  /** Drop every memoized table frame (the memoClear staleness seam; also
-    * any harness that regenerates input files in place mid-JVM). */
+  /** Drop every memoized table frame (called by the one staleness seam,
+    * [[graft.plans.SessionArtifacts.clear]]). */
   private[graft] def tClear(): Unit = tMemo.clear()
 
   /** Normalize whatever physical `ts` the events parquet carries to a
@@ -51,8 +51,8 @@ object Tables {
   /** Session-cached staging directory for queries that materialize a
     * side copy of a test table (CSV/ORC/partitioned/bucketed/compacted
     * stagings): `/tmp/<prefix>_<fp>` where the fingerprint hashes the
-    * source path AND a content checksum (row count + xxhash64-of-rows
-    * sum, one cheap aggregate per invocation). A path-only key let a
+    * source path AND a content checksum (row count + bit_xor of row
+    * xxhash64s, one aggregate per session). A path-only key let a
     * regenerated fixture at the same path silently reuse stale staged
     * data while the oracle recomputed from the new file — spurious
     * divergence misdiagnosed as an engine bug (the q_jsonl_ingest
@@ -60,59 +60,24 @@ object Tables {
     * the guard). */
   def stagingDir(s: SparkSession, dir: String, table: String, prefix: String): String = {
     val df = t(s, dir, table)
-    // The content checksum is one full-scan aggregate per invocation —
-    // and every staging query re-invokes it on every run (2-3 bench runs
-    // × 7 call sites = ~20 scans a suite). Memoize it per session behind
-    // the source files' (path, length, mtime) digest — the same trust
-    // granularity as the quantizer memo's leafDigest: unchanged files ⟹
-    // unchanged checksum, while the regenerated-fixture scenario the
-    // checksum guards against necessarily changes length or mtime. A
-    // frame whose leaves aren't file-backed (never the case for t())
-    // falls through to the direct aggregate.
-    val fpKey = graft.operators.Similarity.leafDigest(df)
-      .map(d => s"$dir|$table|$d")
-    def checksum(): String = {
-      val r = df.agg(
+    // The content checksum is one full-scan aggregate, and every staging
+    // query re-invokes it on every run (2-3 bench runs × 7 call sites),
+    // so it is a session artifact keyed on the source files' (path,
+    // length, mtime) digest: unchanged files ⟹ unchanged checksum, while
+    // the regenerated-fixture scenario the checksum guards against
+    // necessarily changes length or mtime.
+    val r = graft.plans.SessionArtifacts.rows(df, s"checksum:$dir|$table") {
+      df.agg(
         count(lit(1)),
         // bit_xor, not sum: order-free like sum, but cannot overflow
         // under ANSI arithmetic
-        coalesce(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))), lit(0L))).head()
-      s"${r.getLong(0)}|${r.getLong(1)}"
-    }
-    val content = fpKey match {
-      case Some(k) =>
-        val c = stagingFps.get(k)
-        if (c != null) c else stagingFpsPut(k, checksum())
-      case None => checksum()
-    }
+        coalesce(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))), lit(0L)))
+    }.head()
+    val content = s"${r.getLong(0)}|${r.getLong(1)}"
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$dir|$table|$content".getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.take(12)
     new java.io.File(sys.props("java.io.tmpdir"), s"${prefix}_$md").getAbsolutePath
-  }
-
-  private val stagingFps =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Drop every memoized staging checksum. Called by
-    * [[graft.operators.Similarity.memoClear]] so the one
-    * regenerate-inputs-in-place seam resets EVERY session memo together
-    * (advisor round 17: a fixture rewritten in place with identical
-    * length inside mtime granularity would otherwise silently reuse a
-    * stale staging dir — exactly what the checksum was added to catch).
-    * Also the crude size bound: entries are a few dozen bytes and there
-    * are ~7 staging call sites, but a long-lived session cycling many
-    * data dirs should not accrete forever. */
-  private[graft] def stagingFpsClear(): Unit = stagingFps.clear()
-
-  /** Keep the staging-checksum memo bounded without LRU machinery: the
-    * key space is (dir, table, file-metadata digest) — regenerating
-    * fixtures mints new digests — so past a generous cap just reset;
-    * a re-checksum per staging site is one cheap aggregate. */
-  private def stagingFpsPut(k: String, v: String): String = {
-    if (stagingFps.size > 64) stagingFps.clear()
-    stagingFps.putIfAbsent(k, v)
-    v
   }
 
   private val stagingLocks =

@@ -80,8 +80,8 @@ object Verify {
     * per-query fixed overhead — planning, small-job scheduling, the
     * coalesce(1) write — while the executor pool idled; concurrent job
     * submission against one SparkSession is a supported Spark pattern and
-    * every shared session artifact is already lock-guarded: the quantizer
-    * memo and PairGraphCache hold one lock across lookup+derive, temp
+    * every shared session artifact is already lock-guarded:
+    * SessionArtifacts holds one lock per key across lookup+derive, temp
     * views registered by SQL-surface queries are same-name-SAME-DEFINITION
     * under a single sfDir, so replacement is idempotent). The heavyTail
     * rows stay strictly sequential — the streaming replays toggle a
@@ -184,7 +184,7 @@ object Verify {
       // (advisor round 16 — bounded at sf0.01, grows with SF). Middle
       // ground: run the phase in chunks with a quiesce barrier + sweep
       // between them, bounding live blocks to one chunk's worth. The
-      // parquet-backed PairGraphCache and the collected quantizer memos
+      // SessionArtifacts entries (Parquet files or collected rows)
       // survive sweeps by design (sequential mode sweeps after EVERY
       // query), so a mid-phase sweep costs nothing but the barrier.
       broad.grouped(96).foreach { chunk =>

@@ -102,21 +102,19 @@ object BpeTrainer {
     merges.toSeq.toDF("step", "pair", "merged", "cnt")
   }
 
-  /** [[train]] through the session TRAINED-ARTIFACT memo (the
-    * [[Similarity]] quantizer-memo pattern, same key discipline: input
-    * files + canonicalized plan + leaf content digest + knob tag). A
+  /** [[train]] through [[graft.plans.SessionArtifacts.rows]]. A
     * tokenizer's merge table is a model artifact a real pipeline trains
     * once per corpus and applies from every consumer — the tokenize/
     * fertility/packing queries are CONSUMERS of that artifact, exactly
     * like the ANN family consumes the shared IVF centroids and the
     * ledger consumers the session ledger. `q_bpe_train` itself keeps
     * calling [[train]] inline so its bench row times the actual
-    * training. The memoized value is the bounded `steps`-row merge
+    * training. The cached value is the bounded `steps`-row merge
     * table, never corpus-sized. Pass an UN-checkpointed word-frequency
-    * frame: the memo keys on input files, which a checkpointed
+    * frame: the cache keys on input files, which a checkpointed
     * (RDD-backed) frame no longer exposes. */
   def trainCached(words: DataFrame, steps: Int): DataFrame =
-    Similarity.memoized(words, s"bpe:$steps") { train(words, steps) }
+    graft.plans.SessionArtifacts.rows(words, s"bpe:$steps") { train(words, steps) }
 
   /** Apply a learned merge list to a `(word)` frame: replay the merges
     * IN ORDER over each word's character sequence with the same

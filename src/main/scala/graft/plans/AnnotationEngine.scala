@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -52,17 +52,6 @@ final class AnnotationEngine(val registry: Map[AnnotationMode, ViewOperator]) ex
     in.mapPartitions { it =>
       val f = Planner.provide(reg, order, force, assumeFresh) _
       (if (richestPerId) AnnotationEngine.richestOfRuns(it) else it).map(f)
-    }
-  }
-
-  /** Annotate with multiple targets in one pass. */
-  def annotateAll(ds: Dataset[Record], targets: Seq[AnnotationMode]): Dataset[Record] = {
-    val order = targets.flatMap(Planner.chain).distinct
-    val reg = registry
-    implicit val enc = ds.encoder
-    ds.mapPartitions { it =>
-      val f = Planner.provide(reg, order, force = false) _
-      it.map(f)
     }
   }
 
@@ -180,11 +169,5 @@ object AnnotationEngine {
         best
       }
     }
-  }
-
-  /** Typed view over a record DataFrame. */
-  def records(spark: SparkSession, path: String): Dataset[Record] = {
-    import spark.implicits._
-    spark.read.parquet(path).as[Record]
   }
 }

@@ -166,14 +166,6 @@ object Ext {
   private def canonicalDocs(s: SparkSession, dir: String): DataFrame =
     graft.operators.TextDedup.canonicalize(t(s, dir, "documents"), "doc_id", "text")
 
-  /** The near-dup pair graph every curation CONSUMER shares (keep_best,
-    * keep_central, ledger, cluster_cohesion, source_overlap) — derived
-    * once per session per corpus through [[graft.plans.PairGraphCache]]
-    * (a disk-backed, never-collected artifact: the "write the pair graph
-    * once, audit it from every angle" shape a real curation session
-    * uses). The GENERATOR-measuring queries (q_dedup_ngram_jaccard, the
-    * cluster family, q_pagerank) keep deriving inline so their bench
-    * rows time the actual derivation. */
   /** Fixed 10-token-window segmentation of the documents table (this
     * corpus has no line structure) — shared by the batch segment dedup
     * (q_dedup_lines) and its streaming replay so both feed the oracle
@@ -187,9 +179,18 @@ object Ext {
         graft.functions.TokenWindows.token_windows(col("text"), 10))
       .filter(size(col("segs")) > 0)
 
+  /** The near-dup pair graph every curation CONSUMER shares (keep_best,
+    * keep_central, ledger, cluster_cohesion, source_overlap) — derived
+    * once per session per corpus through
+    * [[graft.plans.SessionArtifacts.parquet]] (a disk-backed,
+    * never-collected artifact: the "write the pair graph once, audit it
+    * from every angle" shape a real curation session uses). The
+    * GENERATOR-measuring queries (q_dedup_ngram_jaccard, the cluster
+    * family, q_pagerank) keep deriving inline so their bench rows time
+    * the actual derivation. */
   private def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.parquet(canon,
       s"jac:0.2:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.jaccardPairs(canon, "doc_id", "text",
         threshold = 0.2, portable = !graft.Tables.benchMode,
@@ -206,7 +207,7 @@ object Ext {
     * re-derived the full threshold-0 pass (~0.7 s each at sf0.1). */
   private def truthPairs(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.parquet(canon,
       s"jac:0.0:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.jaccardPairs(canon, "doc_id", "text",
         threshold = 0.0, portable = !graft.Tables.benchMode,
@@ -219,7 +220,7 @@ object Ext {
     * q_lsh_scurve); q_dedup_minhash stays the inline generator row. */
   private def minhashCands(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.parquet(canon,
       s"mh:0.0:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.minhashPairs(canon, "doc_id", "text",
         threshold = 0.0, portable = !graft.Tables.benchMode,
@@ -237,7 +238,7 @@ object Ext {
     * inline so their bench rows time the algorithm. */
   private def nearDupComponents(s: SparkSession, dir: String): DataFrame = {
     val canon = canonicalDocs(s, dir)
-    graft.plans.PairGraphCache.cached(canon,
+    graft.plans.SessionArtifacts.parquet(canon,
       s"cc:jac0.2:${graft.Tables.benchMode}") {
       graft.operators.TextDedup.duplicateClustersAuto(nearDupPairs(s, dir))
     }
@@ -278,7 +279,7 @@ object Ext {
     * `q_dedup_ledger` itself keeps deriving inline so its bench row
     * times the actual derivation. */
   private def curationLedgerCached(s: SparkSession, dir: String): DataFrame =
-    graft.plans.PairGraphCache.cached(t(s, dir, "documents"),
+    graft.plans.SessionArtifacts.parquet(t(s, dir, "documents"),
       s"ledger:${graft.Tables.benchMode}") { curationLedger(s, dir) }
 
   // ---- deduplication --------------------------------------------------
@@ -699,11 +700,11 @@ object Ext {
       // status join) — the cached artifact serves both references from
       // its parquet-backed frame instead of re-deriving the chain
       val led = curationLedgerCached(s, dir)
-      // containment pairs via the session pair cache: the waterfall is a
+      // containment pairs via the session artifact cache: the waterfall is a
       // CONSUMER of the containment graph (q_dedup_containment is the
       // generator-measuring row and keeps deriving inline)
       val canon = canonicalDocs(s, dir)
-      val pairs = graft.plans.PairGraphCache.cached(canon,
+      val pairs = graft.plans.SessionArtifacts.parquet(canon,
         s"cont:0.3:${graft.Tables.benchMode}") {
         graft.operators.TextDedup.containmentPairs(
           canon, "doc_id", "text", threshold = 0.3,
@@ -936,7 +937,7 @@ object Ext {
       // the simhash candidate artifact (q_dedup_simhash stays the inline
       // generator row)
       val canon = canonicalDocs(s, dir)
-      val cand = graft.plans.PairGraphCache.cached(canon,
+      val cand = graft.plans.SessionArtifacts.parquet(canon,
         s"sh:3:${graft.Tables.benchMode}") {
         graft.operators.TextDedup.simhashPairs(
           canon, "doc_id", "text", maxHamming = 3,
@@ -1863,8 +1864,8 @@ object Ext {
       val e = t(s, dir, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       // trainIvf on a file-backed corpus returns a literal-backed frame
-      // (quantizer memo) — NO localCheckpoint here: the residual frame
-      // below must stay (file scan ⋈ LocalRelation) so trainPq's memo can
+      // (SessionArtifacts.rows) — NO localCheckpoint here: the residual frame
+      // below must stay (file scan ⋈ LocalRelation) so trainPq's cache can
       // fingerprint it; a checkpointed LogicalRDD leaf would force the
       // residual codebook to re-train on every catalog pass
       val cents = graft.operators.Similarity.trainIvf(e, k = 8, iters = 2)
@@ -2295,7 +2296,7 @@ object Ext {
     "q_bpe_tokenize" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val wf = graft.operators.BpeTrainer.wordFreq(docs, "text")
-      // CONSUMER of the trained tokenizer (the session artifact memo —
+      // CONSUMER of the trained tokenizer (a SessionArtifacts.rows entry —
       // q_bpe_train keeps training inline so its row times the
       // derivation); keyed on the un-checkpointed dict frame
       val merges = graft.operators.BpeTrainer.trainCached(wf, steps = 5)

@@ -270,9 +270,6 @@ object Sources {
     output.unionByName(untouched.as(store.encoder))
   }
 
-  /** D18: old-output rotation — move an existing output dir aside into
-    * `old_jobs/<name>_<n>` before writing (reference
-    * `CuratorJob.setUpIODirectories`, 119-142). */
   /** Restore `target` if a previous [[swapInPlace]] crashed mid-flight:
     * the surviving full copy is `tmp` (written complete before the target
     * was moved aside) or else `bak` (the pre-swap content). Call BEFORE
@@ -318,6 +315,9 @@ object Sources {
       dst: org.apache.hadoop.fs.Path): Unit =
     require(fs.rename(src, dst), s"store swap failed: rename($src, $dst)")
 
+  /** D18: old-output rotation — move an existing output dir aside into
+    * `old_jobs/<name>_<n>` before writing (reference
+    * `CuratorJob.setUpIODirectories`, 119-142). */
   def rotateOldOutput(spark: SparkSession, path: String): Option[String] = fsTimed {
     val hconf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)

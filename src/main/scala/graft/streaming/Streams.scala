@@ -262,7 +262,7 @@ object Streams {
     }
     banded.groupByKey(r => (r._1, r._2))
       .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: (Int, Long), rows: Iterator[(Int, Long, Long, Long)],
+        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Long)],
             state: GroupState[Seq[(Long, Long, Long)]]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -351,7 +351,7 @@ object Streams {
       .as[(Int, Long, Long, Long, java.sql.Timestamp)]
     banded.groupByKey(r => (r._1, r._2))
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (key: (Int, Long), rows: Iterator[(Int, Long, Long, Long, java.sql.Timestamp)],
+        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Long, java.sql.Timestamp)],
             state: GroupState[Seq[(Long, Long, Long)]]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -444,7 +444,7 @@ object Streams {
     }
     banded.groupByKey(row => (row._1, row._2))
       .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: (Int, String), rows: Iterator[(Int, String, Long, Seq[Long])],
+        (_: (Int, String), rows: Iterator[(Int, String, Long, Seq[Long])],
             state: GroupState[Seq[(Long, Seq[Long], Long)]]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -518,7 +518,7 @@ object Streams {
       .as[(Int, String, Long, Seq[Long], java.sql.Timestamp)]
     banded.groupByKey(row => (row._1, row._2))
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (key: (Int, String), rows: Iterator[(Int, String, Long, Seq[Long], java.sql.Timestamp)],
+        (_: (Int, String), rows: Iterator[(Int, String, Long, Seq[Long], java.sql.Timestamp)],
             state: GroupState[Seq[(Long, Seq[Long], Long)]]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -598,7 +598,7 @@ object Streams {
     }
     bucketed.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: Long, rows: Iterator[(Long, Long, Seq[Double], Double)],
+        (_: Long, rows: Iterator[(Long, Long, Seq[Double], Double)],
             state: GroupState[Seq[(Long, Seq[Double], Double, Long)]]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -747,13 +747,13 @@ object Streams {
         val fs = store.getFileSystem(hconf)
         // restore BEFORE the emptiness probe, or the batch would silently
         // re-seed an empty store and the archive would be lost
-        recoverSwap(fs, store, tmp, bak)
+        graft.sources.Sources.recoverSwap(fs, store, tmp, bak)
         val merged =
           if (graft.sources.Sources.containsSerializedRecords(spark, storeDir))
             graft.sources.Sources.upsert(
               graft.sources.Sources.readRecords(spark, storeDir), batch)
           else batch
-        swapInPlace(fs, store, tmp, bak)(
+        graft.sources.Sources.swapInPlace(fs, store, tmp, bak)(
           graft.sources.Sources.writeRecords(merged, _))
         ()
       }
@@ -788,34 +788,18 @@ object Streams {
           val cell = new org.apache.hadoop.fs.Path(store, s"id_prefix=$p")
           val tmp = new org.apache.hadoop.fs.Path(store, s"_cell_${p}_tmp")
           val bak = new org.apache.hadoop.fs.Path(store, s"_cell_${p}_bak")
-          recoverSwap(fs, cell, tmp, bak)
+          graft.sources.Sources.recoverSwap(fs, cell, tmp, bak)
           val cellBatch = batch.filter(prefix === p)
           val merged =
             if (fs.exists(cell))
               graft.sources.Sources.upsert(
-                spark.read.parquet(cell.toString).as[graft.model.Record], cellBatch)
+                graft.sources.Sources.readRecords(spark, cell.toString), cellBatch)
             else cellBatch
-          swapInPlace(fs, cell, tmp, bak)(
+          graft.sources.Sources.swapInPlace(fs, cell, tmp, bak)(
             graft.sources.Sources.writeRecords(merged, _))
         }
         ()
       }
-
-  // swap/recovery primitives live in Sources (shared with the batch
-  // pipeline's store commit)
-  private def recoverSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
-      tmp: org.apache.hadoop.fs.Path,
-      bak: org.apache.hadoop.fs.Path): Unit =
-    graft.sources.Sources.recoverSwap(fs, target, tmp, bak)
-
-  private def swapInPlace(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
-      tmp: org.apache.hadoop.fs.Path,
-      bak: org.apache.hadoop.fs.Path)(write: String => Unit): Unit =
-    graft.sources.Sources.swapInPlace(fs, target, tmp, bak)(write)
 
   /** Convenience: file-stream source over a directory of event parquet. */
   def readEventStream(spark: org.apache.spark.sql.SparkSession, dir: String,
