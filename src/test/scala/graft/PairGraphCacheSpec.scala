@@ -8,9 +8,9 @@ import graft.plans.SessionArtifacts
   * [[SessionArtifacts]]: derive exactly once per (input, knobs), survive a
   * Checkpoints.releaseAll sweep (the quality that rules out
   * localCheckpoint for this artifact), key on knobs, pass in-memory
-  * corpora through uncached, and keep a handed-out frame readable after
-  * its entry is evicted. The LRU bound and `clear()` are specified for
-  * both forms in SessionArtifactsSpec. */
+  * corpora through uncached, hold the LRU bound, and keep a handed-out
+  * frame readable after its entry is evicted. The LRU refresh order and
+  * `clear()` are specified for both forms in SessionArtifactsSpec. */
 class PairGraphCacheSpec extends SparkSpec {
 
   private def mkCorpus(shift: Int = 0): org.apache.spark.sql.DataFrame = {
@@ -65,6 +65,28 @@ class PairGraphCacheSpec extends SparkSpec {
     val c = SessionArtifacts.parquet(mem, "mem")(mem.select(col("doc_id").as("doc_a")))
     assert(c.count() == 3)
     assert(SessionArtifacts.misses.get == m0, "in-memory corpus must not enter the cache")
+  }
+
+  test("LRU cap bounds the disk footprint; evicted entries re-derive") {
+    SessionArtifacts.clear()
+    val oldCap = SessionArtifacts.maxEntries
+    SessionArtifacts.maxEntries = 2
+    try {
+      val docs = mkCorpus()
+      (1 to 4).foreach { i =>
+        SessionArtifacts.parquet(docs, s"cap:$i") {
+          docs.select(col("doc_id").as("doc_a")) }.count()
+      }
+      assert(SessionArtifacts.size <= 2, s"cap 2 exceeded: ${SessionArtifacts.size}")
+      val m0 = SessionArtifacts.misses.get
+      SessionArtifacts.parquet(docs, "cap:1") {
+        docs.select(col("doc_id").as("doc_a")) }.count()
+      assert(SessionArtifacts.misses.get == m0 + 1,
+        "evicted entry must re-derive (miss), not silently hit")
+    } finally {
+      SessionArtifacts.maxEntries = oldCap
+      SessionArtifacts.clear()
+    }
   }
 
   test("a frame handed out before eviction stays readable after it") {

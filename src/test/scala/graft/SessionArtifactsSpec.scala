@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.plans.SessionArtifacts
 
 /** The rules [[SessionArtifacts]] applies to both storage forms: one LRU
-  * bound and one `clear()`. Form-specific contracts live with their
-  * callers' specs (PairGraphCacheSpec for Parquet, SimilaritySpec for
-  * collected rows). */
+  * bound and one `clear()`. Form-specific contracts, the bound as each
+  * caller meets it among them, live with their callers' specs
+  * (PairGraphCacheSpec for Parquet, SimilaritySpec for collected rows). */
 class SessionArtifactsSpec extends SparkSpec {
 
   /** Both storage forms, as `(name, (input, tag, derive) => frame)`. */

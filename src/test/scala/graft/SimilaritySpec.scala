@@ -463,6 +463,37 @@ class SimilaritySpec extends SparkSpec {
     assert(c3 == c1, "uncached training must equal the memoized result")
   }
 
+  test("quantizer memo: LRU cap evicts the eldest entry, hits refresh") {
+    val oldCap = SessionArtifacts.maxEntries
+    SessionArtifacts.clear()
+    SessionArtifacts.maxEntries = 4
+    try {
+      // tiny file-backed frame: iters=0 training is one trivial job, so
+      // six distinct keys (distinct k => distinct knob tag) stay cheap
+      val dir = java.nio.file.Files.createTempDirectory("graft_memo_cap").toString
+      spark.range(0, 8).selectExpr("id AS vec_id",
+        "array(cast(id AS double), 1.0D) AS v")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      val tiny = spark.read.parquet(dir)
+      (1 to 6).foreach(k => Similarity.trainIvf(tiny, k = k, iters = 0).collect())
+      assert(SessionArtifacts.size <= 4,
+        s"cap 4 exceeded: size = ${SessionArtifacts.size}")
+      // k=1 and k=2 were evicted (eldest-first): re-training k=1 must MISS
+      val misses0 = SessionArtifacts.misses.get
+      Similarity.trainIvf(tiny, k = 1, iters = 0).collect()
+      assert(SessionArtifacts.misses.get > misses0,
+        "evicted entry must re-train (miss), not silently hit")
+      // the most recent entry (k=6) survived: HIT
+      val hits0 = SessionArtifacts.hits.get
+      Similarity.trainIvf(tiny, k = 6, iters = 0).collect()
+      assert(SessionArtifacts.hits.get > hits0,
+        "recent entry must still be cached after evictions")
+    } finally {
+      SessionArtifacts.maxEntries = oldCap
+      SessionArtifacts.clear()
+    }
+  }
+
   test("quantizer memo fingerprints LocalRelation leaves: residual " +
     "codebooks memoize, distinct literal centroids never alias") {
     def codebook(df: org.apache.spark.sql.DataFrame) =
